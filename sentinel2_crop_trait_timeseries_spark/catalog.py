@@ -1752,6 +1752,96 @@ def kernel_smooth_events(spark, sf_dir):
     )
 
 
+# =====================================================================
+# Helpers shared across the catalog_* modules
+# =====================================================================
+# They live here, above the registration imports at the end of this
+# file: a catalog_* module imported on its own is still half-initialized
+# while those imports run its siblings, so siblings import shared names
+# only from this module, never from each other.
+
+# epoch microseconds / cent fixed-point helpers (Spark side)
+_US = "cast(unix_micros(cast(ts as timestamp)) as bigint)"
+_CENTS = "cast(round(value * 100) as bigint)"
+# DuckDB twins
+_SQL_US = "epoch_us(ts)"
+_SQL_CENTS = "cast(round(value * 100) as bigint)"
+
+_DAY_US = 86_400_000_000
+
+
+def _e(spark, sf_dir):
+    """events with the µs/cents projection the catalog_ts and
+    catalog_final event queries use."""
+    return _t(spark, sf_dir, "events").select(
+        "event_id",
+        "user_id",
+        "event_type",
+        F.expr(_US).alias("ts_us"),
+        F.expr(_CENTS).alias("cents"),
+    )
+
+
+# CUSUM changepoint detector (catalog_ts, streaming/cusum_stream)
+_CUSUM_K = 30_000   # allowance, in 2x-cents units ($150)
+_CUSUM_H = 200_000  # alarm threshold, in 2x-cents units ($1000)
+
+
+def _shingles(d: DataFrame) -> DataFrame:
+    """(doc_id, sh): distinct 3-word shingles per doc.
+
+    Distinctness is PER DOC, so it is enforced in-row with
+    array_distinct before the explode — a narrow map. (An earlier
+    version used DataFrame.distinct(), which hash-exchanged the whole
+    shingle stream for a property each row already has locally.)
+
+    The word array is MATERIALIZED as a column before the shingle
+    transform references it: higher-order lambdas are interpreted, not
+    codegen'd, so an inlined `ws` expression re-tokenizes the whole
+    doc for every F.get(ws, i) of every shingle — O(len^2) per doc
+    (measured 9 s -> 0.4 s at sf0.1 for the decontamination probe)."""
+    ws = F.filter(F.split("text", r"\s+"), lambda x: x != "")
+    base = _spread(d).select("doc_id", ws.alias("ws")).filter(F.size("ws") >= 3)
+    sh = F.transform(
+        F.sequence(F.lit(0), F.size("ws") - 3),
+        lambda i: F.concat_ws(
+            " ",
+            F.get("ws", i),
+            F.get("ws", i + 1),
+            F.get("ws", i + 2),
+        ),
+    )
+    return base.select("doc_id", F.explode(F.array_distinct(sh)).alias("sh"))
+
+
+_SQL_SHINGLES = r"""
+      SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS sh
+      FROM (SELECT doc_id,
+                   list_filter(regexp_split_to_array(text, '\s+'),
+                               x -> x <> '') AS ws
+            FROM documents),
+           LATERAL (SELECT unnest(generate_series(1, len(ws) - 2)) AS i) t
+      WHERE len(ws) >= 3
+"""
+
+
+def _swords(d: DataFrame) -> DataFrame:
+    """(source, doc_id, w): whitespace words with the source carried
+    (catalog_docs._words drops source; corpus-health groups by it)."""
+    arr = F.filter(F.split("text", r"\s+"), lambda x: x != "")
+    # _spread: single-file fixture scans arrive as one split (see
+    # catalog._spread) — identity at production file counts
+    return _spread(d).select("source", "doc_id", F.explode(arr).alias("w"))
+
+
+_SQL_SWORDS = r"""
+      SELECT source, doc_id,
+             unnest(list_filter(regexp_split_to_array(text, '\s+'),
+                                x -> x <> '')) AS w
+      FROM documents
+"""
+
+
 # register the documents/embeddings training-data pipeline queries
 from sentinel2_crop_trait_timeseries_spark import catalog_docs  # noqa: E402,F401
 from sentinel2_crop_trait_timeseries_spark import catalog_engine  # noqa: E402,F401

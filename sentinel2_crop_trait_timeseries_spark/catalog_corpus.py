@@ -27,33 +27,22 @@ Exactness conventions (the catalog.py / catalog_ts.py house rules):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from sentinel2_crop_trait_timeseries_spark.catalog import _q, _spread, _t
-from sentinel2_crop_trait_timeseries_spark.catalog_docs import (
+from sentinel2_crop_trait_timeseries_spark.catalog import (
     _SQL_SHINGLES,
+    _SQL_SWORDS,
+    _q,
     _shingles,
+    _spread,
+    _swords,
+    _t,
 )
 
 _GRID = 1 << 20  # dyadic snap denominator for ln() values
 
 
-def _swords(d: DataFrame) -> DataFrame:
-    """(source, doc_id, w): whitespace words with the source carried
-    (catalog_docs._words drops source; corpus-health groups by it)."""
-    arr = F.filter(F.split("text", r"\s+"), lambda x: x != "")
-    # _spread: single-file fixture scans arrive as one split (see
-    # catalog._spread) — identity at production file counts
-    return _spread(d).select("source", "doc_id", F.explode(arr).alias("w"))
-
-
-_SQL_SWORDS = r"""
-      SELECT source, doc_id,
-             unnest(list_filter(regexp_split_to_array(text, '\s+'),
-                                x -> x <> '')) AS w
-      FROM documents
-"""
 
 
 # =====================================================================

@@ -31,7 +31,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from sentinel2_crop_trait_timeseries_spark.catalog import _q, _spread, _t
+from sentinel2_crop_trait_timeseries_spark.catalog import (
+    _SQL_SHINGLES,
+    _q,
+    _shingles,
+    _spread,
+    _t,
+)
 
 # ---------------------------------------------------------------------
 # shared helpers
@@ -269,44 +275,6 @@ def dedup_exact(spark, sf_dir):
     return d.groupBy(F.md5(F.col("text").cast("binary")).alias("text_hash")).agg(
         F.count("*").alias("n_dups"), F.min("doc_id").alias("keeper")
     )
-
-
-def _shingles(d: DataFrame) -> DataFrame:
-    """(doc_id, sh): distinct 3-word shingles per doc.
-
-    Distinctness is PER DOC, so it is enforced in-row with
-    array_distinct before the explode — a narrow map. (An earlier
-    version used DataFrame.distinct(), which hash-exchanged the whole
-    shingle stream for a property each row already has locally.)
-
-    The word array is MATERIALIZED as a column before the shingle
-    transform references it: higher-order lambdas are interpreted, not
-    codegen'd, so an inlined `ws` expression re-tokenizes the whole
-    doc for every F.get(ws, i) of every shingle — O(len^2) per doc
-    (measured 9 s -> 0.4 s at sf0.1 for the decontamination probe)."""
-    ws = F.filter(F.split("text", r"\s+"), lambda x: x != "")
-    base = _spread(d).select("doc_id", ws.alias("ws")).filter(F.size("ws") >= 3)
-    sh = F.transform(
-        F.sequence(F.lit(0), F.size("ws") - 3),
-        lambda i: F.concat_ws(
-            " ",
-            F.get("ws", i),
-            F.get("ws", i + 1),
-            F.get("ws", i + 2),
-        ),
-    )
-    return base.select("doc_id", F.explode(F.array_distinct(sh)).alias("sh"))
-
-
-_SQL_SHINGLES = r"""
-      SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS sh
-      FROM (SELECT doc_id,
-                   list_filter(regexp_split_to_array(text, '\s+'),
-                               x -> x <> '') AS ws
-            FROM documents),
-           LATERAL (SELECT unnest(generate_series(1, len(ws) - 2)) AS i) t
-      WHERE len(ws) >= 3
-"""
 
 
 @_q(

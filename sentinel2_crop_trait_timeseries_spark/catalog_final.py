@@ -36,16 +36,15 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from sentinel2_crop_trait_timeseries_spark.catalog import _q, _t
-from sentinel2_crop_trait_timeseries_spark.catalog_corpus import (
-    _SQL_SWORDS,
-    _swords,
-)
-from sentinel2_crop_trait_timeseries_spark.catalog_ts import (
-    _SQL_CENTS,
-    _SQL_US,
+from sentinel2_crop_trait_timeseries_spark.catalog import (
     _DAY_US,
+    _SQL_CENTS,
+    _SQL_SWORDS,
+    _SQL_US,
     _e,
+    _q,
+    _swords,
+    _t,
 )
 
 _GRID = 1 << 20  # dyadic snap denominator (catalog_corpus house grid)

@@ -34,33 +34,22 @@ from pyspark.sql import functions as F
 
 from sentinel2_crop_trait_timeseries_spark.catalog import (
     QUERIES,
+    _CENTS,
+    _CUSUM_H,
+    _CUSUM_K,
+    _DAY_US,
+    _SQL_CENTS,
+    _SQL_US,
     _SQL_WEEK,
+    _US,
+    _e,
     _q,
     _spread,
     _t,
     _week_bucket,
 )
 
-# epoch microseconds / cent fixed-point helpers (Spark side)
-_US = "cast(unix_micros(cast(ts as timestamp)) as bigint)"
-_CENTS = "cast(round(value * 100) as bigint)"
-# DuckDB twins
-_SQL_US = "epoch_us(ts)"
-_SQL_CENTS = "cast(round(value * 100) as bigint)"
-
-_DAY_US = 86_400_000_000
 _GAP_US = 21_600_000_000  # 6 h island threshold
-
-
-def _e(spark, sf_dir):
-    """events with the µs/cents projection used by every query here."""
-    return _t(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.expr(_US).alias("ts_us"),
-        F.expr(_CENTS).alias("cents"),
-    )
 
 
 # =====================================================================
@@ -716,10 +705,6 @@ def rolling_median_user(spark, sf_dir):
 # =====================================================================
 # CUSUM changepoint detector (Page 1954), exact integer state
 # =====================================================================
-
-_CUSUM_K = 30_000   # allowance, in 2x-cents units ($150)
-_CUSUM_H = 200_000  # alarm threshold, in 2x-cents units ($1000)
-
 
 @_q(
     "cusum_changepoint_user",

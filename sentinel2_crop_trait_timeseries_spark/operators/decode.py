@@ -136,9 +136,10 @@ def decode_observations_arrow(seq: DataFrame) -> DataFrame:
     def fn(it):
         for pdf in it:
             d, hours, vals, _ = _g.decode_batch(pdf)
-            # Categorical -> Arrow dictionary: int codes over the
-            # worker-JVM socket instead of one string pair per obs row,
-            # and integer instead of object gathers (see gapfill.py)
+            # Categoricals: integer instead of object gathers per obs
+            # row. The JVM still receives full strings: PySpark casts a
+            # Categorical to its category dtype before building Arrow
+            # arrays (see gapfill.py)
             src_cat = pd.Categorical(pdf["source"])
             # factorize: duplicate doc_ids in a batch are legal input
             did_codes, did_cats = pd.factorize(pdf["doc_id"], sort=False)

@@ -20,15 +20,16 @@ Semantics follow the reference's reconstruction loop
 
 Execution shape (the scale-critical part): one ``sequences`` row holds a
 full per-doc series, so this runs as ``mapInPandas`` over the sequence
-scan — a NARROW op, no shuffle, no groupBy. All math is vectorized
-numpy across the entire Arrow batch (docs are processed flat via
-offset arithmetic, not a Python per-doc loop). The reference processes
-one pixel at a time in a Python loop (:416); here a 10k-doc batch is a
-handful of numpy kernels.
+rows — no groupBy, and the dense or tier rows it emits never shuffle.
+All math is vectorized numpy across the entire Arrow batch (docs are
+processed flat via offset arithmetic, not a Python per-doc loop). The
+reference processes one pixel at a time in a Python loop (:416); here a
+10k-doc batch is a handful of numpy kernels.
 
 Output: dense hourly rows ``(source, doc_id, ts, value, is_obs)`` or,
-fused, the per-doc tier rollups (hourly/daily/weekly) without any
-shuffle at all.
+fused, the per-doc tier rollups (hourly/daily/weekly); the fused form
+range-splits the compact sequence rows by (source, doc_id) once, so
+that its tier sink writes few files.
 """
 
 from __future__ import annotations
@@ -412,12 +413,11 @@ def gapfill_batch(pdf: pd.DataFrame, curve: str = "asymptotic",
     out_doc, out_hr, out_val, out_obs = _gapfill_core(
         pdf, curve=curve, params=params, knockout=knockout,
         outlier_filter=outlier_filter, seed=seed)
-    # string columns ride as pandas Categorical -> Arrow DICTIONARY
-    # arrays: the per-doc-constant strings become int32 codes on the
-    # worker->JVM socket (~35 B/row of redundant string bytes dropped —
-    # the dense output is memory-bandwidth-bound end to end) and the
-    # per-row object gathers become integer gathers. Spark reads
-    # dictionary arrays natively as string columns.
+    # string columns are built as pandas Categoricals so the per-row
+    # gathers are integer gathers, not object ones. They still cross to
+    # the JVM as full strings: PySpark casts a Categorical back to its
+    # category dtype before it builds the Arrow arrays, so no dictionary
+    # codes reach the socket.
     src_cat = pd.Categorical(pdf["source"])
     # factorize (not from_codes on the raw column): doc_id values may
     # legitimately repeat within a batch (e.g. appended tables), and
@@ -462,7 +462,7 @@ def gapfill(seq: DataFrame, curve: str = "asymptotic", params: dict | None = Non
 
 
 # ---------------------------------------------------------------------
-# Fused gap-fill + per-doc tier rollup (shuffle-free)
+# Fused gap-fill + per-doc tier rollup (tier rows never shuffle)
 # ---------------------------------------------------------------------
 
 TIER_SCHEMA = (
@@ -564,9 +564,10 @@ def gapfill_tiers_batch(pdf: pd.DataFrame, curve: str = "asymptotic",
         np.arange(len(parts), dtype=np.int8),
         [len(p[1][0]) for p in parts],
     )
-    # Categorical -> Arrow dictionary: tier/source/doc_id strings are
-    # per-doc-constant; int codes over the socket instead of ~35 B/row
-    # of repeated strings, and integer gathers instead of object ones
+    # Categoricals: tier/source/doc_id are per-doc-constant, so the
+    # per-row gathers are integer gathers. The JVM still receives full
+    # strings (PySpark casts Categoricals to their category dtype before
+    # building Arrow arrays), ~86 B/row of Arrow in all.
     src_cat = pd.Categorical(pd.Series(doc_src))
     did_codes, did_cats = pd.factorize(pd.Series(doc_did), sort=False)
     return pd.DataFrame(
@@ -595,16 +596,29 @@ def gapfill_tiers_batch(pdf: pd.DataFrame, curve: str = "asymptotic",
 def gapfill_tiers(seq: DataFrame, curve: str = "asymptotic",
                   params: dict | None = None, knockout: float = 0.0,
                   outlier_filter: bool = True, seed: int = 42) -> DataFrame:
-    """sequences -> all three per-doc retention tiers, SHUFFLE-FREE.
+    """sequences -> all three per-doc retention tiers.
 
     The scale-critical fusion: dense reconstruction and its per-doc
     hourly/daily/weekly rollups happen inside one Arrow batch, so the
-    job is a pure narrow map from the sequence scan to the tier sink.
-    At 10^12 sequences this removes the dominant shuffle entirely —
-    only cross-doc continuous aggregates (rollup.continuous_aggregate)
-    ever shuffle, and those shuffle pre-reduced rollup rows.
+    tier rows never shuffle — only cross-doc continuous aggregates
+    (rollup.continuous_aggregate) ever shuffle, and those shuffle
+    pre-reduced rollup rows.
+
+    The one shuffle is a range split of the compact sequence rows on
+    (source, doc_id) before the kernel (~130 B per doc on disk, against
+    ~2,000 tier rows per doc that stay put). Each task then holds a
+    contiguous run of sources, so a ``partitionBy("tier", "source")``
+    sink writes at most 3 x (sources + tasks - 1) files instead of one
+    per task x tier x source, and a hot source is cut across tasks
+    rather than sent to one (Jigsaw-style irregular partitions: keep a
+    key together, split the hot one). The task count is
+    ``spark.sql.shuffle.partitions``, fixed so AQE cannot coalesce the
+    small sequence input to one task.
+
     Output is identical to cascade(gapfill(seq)) (tested property).
     """
+    n = int(seq.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    seq = seq.repartitionByRange(n, "source", "doc_id")
     chunk = CHUNK_DOCS
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -108,10 +108,7 @@ def run_cusum_stream_once(
     n_chunks time-range files (one micro-batch each, so state
     genuinely carries across batches); return the FINAL state row per
     user (the last update, selected by max n_seen)."""
-    from sentinel2_crop_trait_timeseries_spark.catalog_ts import (
-        _CUSUM_H,
-        _CUSUM_K,
-    )
+    from sentinel2_crop_trait_timeseries_spark.catalog import _CUSUM_H, _CUSUM_K
 
     e = spark.read.parquet(f"{sf_dir}/{file_name}").select(
         "user_id",
@@ -202,10 +199,7 @@ def run_cusum_stream_resumable(
     production monitor. Returns the final state row per user."""
     import shutil
 
-    from sentinel2_crop_trait_timeseries_spark.catalog_ts import (
-        _CUSUM_H,
-        _CUSUM_K,
-    )
+    from sentinel2_crop_trait_timeseries_spark.catalog import _CUSUM_H, _CUSUM_K
 
     e = spark.read.parquet(f"{sf_dir}/{file_name}").select(
         "user_id",

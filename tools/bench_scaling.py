@@ -125,7 +125,7 @@ def main() -> None:
     speedup = r_low["sec"] / r_high["sec"]
     ideal = high / low
     out = {
-        "job": "fused gapfill + per-doc 3-tier rollup (narrow, shuffle-free)",
+        "job": "fused gapfill + per-doc 3-tier rollup (tier rows never shuffle)",
         "sink": SINK,
         "n_docs": n_docs,
         "low": r_low,

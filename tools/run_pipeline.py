@@ -10,7 +10,8 @@ Stages (all per-source partitions, committed to the checkpoint manifest
 so a killed run resumes where it stopped):
 
   1. resume set      = distinct sources LEFT ANTI done manifest keys
-  2. fused rollup    = gapfill_tiers over the todo sources (narrow, no
+  2. fused rollup    = gapfill_tiers over the todo sources (one range
+                       shuffle of the sequence rows; tier rows never
                        shuffle), written partitionBy(tier, source)
   3. curve fit       = per-doc batched-LM sigmoid params + fit_rmse
   4. compression     = Gorilla segments per (source, doc_id)
@@ -79,7 +80,8 @@ def main() -> None:
 
     work = seq.join(F.broadcast(todo), "source", "left_semi")
 
-    # fused narrow pass: gap-fill + 3 retention tiers, no shuffle
+    # fused pass: gap-fill + 3 retention tiers; only the sequence rows
+    # shuffle (range split on source, doc_id), the tier rows never do
     tiers = gapfill_tiers(work, curve=args.curve, knockout=args.knockout)
     tiers.write.mode("overwrite").partitionBy("tier", "source").parquet(args.output)
     tiers_stored = spark.read.parquet(args.output)
