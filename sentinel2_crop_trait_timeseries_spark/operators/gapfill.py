@@ -320,7 +320,7 @@ def _gapfill_core(pdf: pd.DataFrame, curve: str = "asymptotic",
     # inputs). The 70 KB LUT stays cache-resident — this removes the
     # dominant DRAM passes (sin/exp temporaries) from the hot loop,
     # which is what lets 32 concurrent workers scale (memory-bandwidth
-    # profile, see tools/bench_scaling.py).
+    # profile, measured with tools/bench_scaling_calibrated.py).
     r = _response_lut(curve, params)[np.mod(hr, HOURS_PER_PERIOD)]
     doc_start_pos = np.concatenate(([0], np.cumsum(span)[:-1]))
 

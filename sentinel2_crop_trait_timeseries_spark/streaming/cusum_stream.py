@@ -98,25 +98,23 @@ def cusum_stateful(stream: DataFrame, k: int, h: int) -> DataFrame:
     )
 
 
-def run_cusum_stream_once(
-    spark: SparkSession,
-    sf_dir: str,
-    file_name: str = "events.parquet",
-    n_chunks: int = 4,
-) -> DataFrame:
-    """Drive the streaming CUSUM over the events fixture split into
-    n_chunks time-range files (one micro-batch each, so state
-    genuinely carries across batches); return the FINAL state row per
-    user (the last update, selected by max n_seen)."""
-    from sentinel2_crop_trait_timeseries_spark.catalog import _CUSUM_H, _CUSUM_K
+def _stage_chunks(spark: SparkSession, sf_dir: str, file_name: str,
+                  n_chunks: int, out_dir: str):
+    """Split the events fixture into n_chunks time-range dirs
+    chunk=1..n under out_dir (files written, and mtime-pinned, in time
+    order: the harness's stand-in for a per-key-ordered source) and
+    train the offline detector target, each user's doubled exact
+    median. Returns (per-file schema, targets).
 
+    ONE partitioned write: the global ntile sort runs once and a single
+    task lays out every chunk directory (a write per chunk re-sorted the
+    fixture each time, 26 s -> ~13 s at sf1.0)."""
     e = spark.read.parquet(f"{sf_dir}/{file_name}").select(
         "user_id",
         "event_id",
         F.expr(_US).alias("ts_us"),
         F.expr(_CENTS).alias("cents"),
     )
-    # offline detector target: the user's doubled exact median
     lc = e.groupBy("user_id").agg(
         F.sort_array(F.collect_list("cents")).alias("lc")
     )
@@ -129,32 +127,32 @@ def run_cusum_stream_once(
         ).alias("target_x2"),
     ).localCheckpoint(eager=True)
 
-    # time-range chunking: the harness's stand-in for a per-key-ordered
-    # source; files written (and mtime-pinned) in time order. r6: ONE
-    # partitioned write — the old loop re-executed the global-ntile
-    # plan twice per chunk (a filter+write and a dead count), i.e. 8
-    # full sorts of the fixture; now the sort runs once and a single
-    # task lays out every chunk directory (26 s -> ~13 s at sf1.0).
-    in_dir = tempfile.mkdtemp(prefix="s2tt_stream_cusum_")
     ranked = e.withColumn(
         "chunk",
         F.ntile(n_chunks).over(Window.orderBy("ts_us", "event_id")),
     )
     ranked.coalesce(1).write.mode("overwrite").partitionBy("chunk").parquet(
-        in_dir
+        out_dir
     )
     for c in range(1, n_chunks + 1):
-        path = os.path.join(in_dir, f"chunk={c}")
+        path = os.path.join(out_dir, f"chunk={c}")
         t = 1_700_000_000 + c
         for root, _dirs, files in os.walk(path):
             for f in files:
                 os.utime(os.path.join(root, f), (t, t))
         os.utime(path, (t, t))
-
     # leaf-dir read: recursiveFileLookup on the stream disables
     # partition discovery, so `chunk` stays a directory name, not a
     # column — the per-file schema is unchanged from the old layout
-    schema = spark.read.parquet(os.path.join(in_dir, "chunk=1")).schema
+    schema = spark.read.parquet(os.path.join(out_dir, "chunk=1")).schema
+    return schema, targets
+
+
+def _cusum_over_chunks(spark: SparkSession, schema, in_dir: str,
+                       targets: DataFrame) -> DataFrame:
+    """The CUSUM operator over one chunk file per trigger."""
+    from sentinel2_crop_trait_timeseries_spark.catalog import _CUSUM_H, _CUSUM_K
+
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -163,9 +161,34 @@ def run_cusum_stream_once(
         .parquet(in_dir)
         .join(F.broadcast(targets), "user_id")
     )
+    return cusum_stateful(stream, _CUSUM_K, _CUSUM_H)
+
+
+def _final_rows(upd: DataFrame) -> DataFrame:
+    """The FINAL state row per user: the last update, by max n_events."""
+    wfin = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
+    return (
+        upd.withColumn("rn", F.row_number().over(wfin))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+
+
+def run_cusum_stream_once(
+    spark: SparkSession,
+    sf_dir: str,
+    file_name: str = "events.parquet",
+    n_chunks: int = 4,
+) -> DataFrame:
+    """Drive the streaming CUSUM over the events fixture split into
+    n_chunks time-range files (one micro-batch each, so state
+    genuinely carries across batches); return the FINAL state row per
+    user (the last update, selected by max n_seen)."""
+    in_dir = tempfile.mkdtemp(prefix="s2tt_stream_cusum_")
+    schema, targets = _stage_chunks(spark, sf_dir, file_name, n_chunks, in_dir)
     name = "s2tt_stream_cusum"
     q = (
-        cusum_stateful(stream, _CUSUM_K, _CUSUM_H)
+        _cusum_over_chunks(spark, schema, in_dir, targets)
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("update")
@@ -173,13 +196,7 @@ def run_cusum_stream_once(
         .start()
     )
     q.awaitTermination()
-    upd = spark.table(name)
-    wfin = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        upd.withColumn("rn", F.row_number().over(wfin))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    return _final_rows(spark.table(name))
 
 
 def run_cusum_stream_resumable(
@@ -199,65 +216,20 @@ def run_cusum_stream_resumable(
     production monitor. Returns the final state row per user."""
     import shutil
 
-    from sentinel2_crop_trait_timeseries_spark.catalog import _CUSUM_H, _CUSUM_K
-
-    e = spark.read.parquet(f"{sf_dir}/{file_name}").select(
-        "user_id",
-        "event_id",
-        F.expr(_US).alias("ts_us"),
-        F.expr(_CENTS).alias("cents"),
-    )
-    lc = e.groupBy("user_id").agg(
-        F.sort_array(F.collect_list("cents")).alias("lc")
-    )
-    n = F.size("lc").cast("long")
-    targets = lc.select(
-        "user_id",
-        (
-            F.element_at("lc", ((n + 1) / 2).cast("int"))
-            + F.element_at("lc", (n / 2 + 1).cast("int"))
-        ).alias("target_x2"),
-    ).localCheckpoint(eager=True)
-
     stage = tempfile.mkdtemp(prefix="s2tt_cusum_stage_")
     live = tempfile.mkdtemp(prefix="s2tt_cusum_live_")
     ckpt = tempfile.mkdtemp(prefix="s2tt_cusum_ckpt_")
     sink = tempfile.mkdtemp(prefix="s2tt_cusum_sink_")
-    ranked = e.withColumn(
-        "chunk",
-        F.ntile(n_chunks).over(Window.orderBy("ts_us", "event_id")),
-    )
-    # one partitioned write (see run_cusum_stream_once): the global
-    # ntile sort executes once for all chunks
-    ranked.coalesce(1).write.mode("overwrite").partitionBy("chunk").parquet(
-        stage
-    )
-    for c in range(1, n_chunks + 1):
-        path = os.path.join(stage, f"chunk={c}")
-        t = 1_700_000_000 + c
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                os.utime(os.path.join(root, f), (t, t))
-        os.utime(path, (t, t))
-
-    schema = spark.read.parquet(os.path.join(stage, "chunk=1")).schema
+    schema, targets = _stage_chunks(spark, sf_dir, file_name, n_chunks, stage)
 
     def _phase() -> None:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(live)
-            .join(F.broadcast(targets), "user_id")
-        )
         # batchId-keyed OVERWRITE is the canonical exactly-once
         # foreachBatch sink: a retried micro-batch rewrites its own
         # directory instead of appending a duplicate (batch ids are
         # monotonic across checkpoint recoveries, so phases never
         # collide)
         q = (
-            cusum_stateful(stream, _CUSUM_K, _CUSUM_H)
+            _cusum_over_chunks(spark, schema, live, targets)
             .writeStream.foreachBatch(
                 lambda b, i: b.write.mode("overwrite").parquet(
                     os.path.join(sink, f"batch={i}")
@@ -277,14 +249,8 @@ def run_cusum_stream_resumable(
         shutil.move(os.path.join(stage, f"chunk={c}"), live)
     _phase()  # phase B: NEW query, same checkpoint -> state restored
 
-    upd = (
+    return _final_rows(
         spark.read.option("recursiveFileLookup", "true")
         .option("pathGlobFilter", "*.parquet")
         .parquet(sink)
-    )
-    wfin = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        upd.withColumn("rn", F.row_number().over(wfin))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
     )

@@ -10,15 +10,19 @@ job cannot beat the silicon it is given). Unconditioned medians mix
 the regimes and measure the host, not the engine.
 
 Method: each measurement pair runs the two levels back-to-back in
-alternating order (8->32, then 32->8, ...), bracketed by ~0.6 s 32-way
-burn probes that record the host's instantaneous total capacity. A
-pair is CLEAN when every bracketing probe is within tolerance of the
-session's peak capacity — i.e. the host had its full 32 cores to give
-for both halves. The scaling efficiency of the ENGINE is the median
-ratio over clean pairs; all raw pairs, probes, and the throttled-pair
-ratios are reported alongside so nothing is hidden.
+alternating order (low->high, then high->low, ...), bracketed by ~0.6 s
+32-way burn probes that record the host's instantaneous total capacity.
+Each level runs in its own subprocess pinned to the first `cores` CPUs
+of this process's affinity mask. `pair_verdict` is the one clean-pair
+rule; `score` applies it to this run's pairs and to archived session
+JSONs alike. The scaling efficiency of the ENGINE is the median
+clean-pair ratio over the ideal; all raw pairs and probes are reported
+alongside so nothing is hidden.
 
 Usage: python tools/bench_scaling_calibrated.py [n_docs] [low] [high] [pairs]
+
+`high` defaults to the CPUs in the affinity mask and `low` to high // 4;
+a level outside the mask is an error.
 
 Known limitation of the session-relative peak: if the host spends the
 whole session in a steady lower capacity band but ONE probe catches a
@@ -49,6 +53,21 @@ SEQ_PATH = "/tmp/scaling_seq_cal.parquet"
 PROBE_PROCS = 32
 PROBE_SEC = 0.6
 
+# Clean-pair rule, each bound targeting a distinct failure mode the
+# bursty host exhibits:
+#  - every bracketing probe >= PROBE_TOL x the session's peak: the host
+#    had full capacity at the pair's boundaries;
+#  - ratio <= SUPERIDEAL x ideal: a super-ideal ratio is physically
+#    impossible and means a throttle landed MID-RUN on the low-core
+#    half, between probes (2% timer-noise headroom);
+#  - /proc/stat steal DURING each half < MAX_STEAL cores: the
+#    hypervisor did not take cores away mid-run (catches throttles in
+#    either half that the probes cannot see; archived sessions that
+#    predate the steal columns count as zero).
+PROBE_TOL = 0.75
+SUPERIDEAL = 1.02
+MAX_STEAL = 1.0
+
 
 def _burn(dur: float) -> int:
     end = time.perf_counter() + dur
@@ -72,17 +91,57 @@ def probe_capacity(pool: mp.Pool, settle: float = 2.5) -> float:
     return sum(res) / wall / 1e6
 
 
-def _read_stat() -> tuple[int, int]:
-    """(busy, steal) jiffies from /proc/stat's aggregate cpu line."""
-    parts = open("/proc/stat").readline().split()
-    user, nice, system, _idle, _iow, irq, softirq, steal = map(
-        int, parts[1:9]
-    )
-    return user + nice + system + irq + softirq, steal
+def level_cpus(cores: int) -> list[int]:
+    """The CPUs a `cores`-slot level is pinned to: the first `cores` of
+    this process's affinity mask, which need not start at CPU 0."""
+    mask = sorted(os.sched_getaffinity(0))
+    if not 1 <= cores <= len(mask):
+        raise ValueError(
+            f"level {cores} is outside the {len(mask)} CPUs this process may use"
+        )
+    return mask[:cores]
 
 
-def run_once(cores: int) -> dict:
-    """One timed flagship run at `cores` (noop sink).
+def _peak(pairs: list[dict]) -> float:
+    return max(max(p["probes_M_per_s"]) for p in pairs)
+
+
+def pair_verdict(p: dict, peak: float, ideal: float) -> str:
+    """'clean', 'superideal' or 'throttled' under the clean-pair rule."""
+    if min(p["probes_M_per_s"]) < PROBE_TOL * peak:
+        return "throttled"
+    if p["ratio"] > SUPERIDEAL * ideal:
+        return "superideal"
+    steal = max(p.get("low_steal_cores", 0.0), p.get("high_steal_cores", 0.0))
+    return "clean" if steal < MAX_STEAL else "throttled"
+
+
+def score(sessions: list[dict]) -> dict:
+    """Pool the pairs of one or more sessions (this script's JSON output,
+    live or archived) under the clean-pair rule. Each pair is judged
+    against its own session's peak probe and ideal speedup, and pooled as
+    ratio / ideal, so sessions with different level factors mix."""
+    eff: dict[str, list[float]] = {"clean": [], "superideal": [], "throttled": []}
+    for s in sessions:
+        peak, ideal = _peak(s["pairs"]), s["ideal_speedup"]
+        for p in s["pairs"]:
+            eff[pair_verdict(p, peak, ideal)].append(p["ratio"] / ideal)
+
+    def med(xs):
+        return round(statistics.median(xs), 3) if xs else None
+
+    return {
+        "n_pairs": sum(len(v) for v in eff.values()),
+        "n_clean": len(eff["clean"]),
+        "n_superideal_excluded": len(eff["superideal"]),
+        "n_throttled": len(eff["throttled"]),
+        "scaling_efficiency_clean": med(eff["clean"]),
+        "scaling_efficiency_all": med([x for v in eff.values() for x in v]),
+    }
+
+
+def run_once(cpus: list[int]) -> dict:
+    """One timed flagship run on `cpus` (noop sink).
 
     The fresh context's Python workers cold-import pandas/numpy inside
     the first job (~2 s across all slots) — a per-SESSION cost that a
@@ -96,7 +155,7 @@ def run_once(cores: int) -> dict:
     bracketing probes cannot see (they only sample between runs).
 
     CPU AFFINITY: each run executes in a SUBPROCESS that pins
-    sched_setaffinity(cores) BEFORE creating its SparkSession, so the
+    sched_setaffinity(cpus) BEFORE creating its SparkSession, so the
     freshly spawned JVM and its forked Python workers inherit the mask.
     (Pinning in-process after a prior session existed is a no-op: the
     py4j gateway JVM persists across spark.stop() and keeps its original
@@ -105,13 +164,14 @@ def run_once(cores: int) -> dict:
     an 8-core proxy: JVM helper threads (GC, Arrow IPC, ColumnarToRow)
     run beside the 8 task slots. busy_cores in the output verifies the
     mask held for each run."""
+    cores = len(cpus)
     # SCALING_JOB selects the measured pipeline: 'fused' (default) is
-    # the zero-Exchange narrow flagship; 'hourly_shuffle' is the
-    # SHUFFLING twin — decode raw observations into the central
-    # groupBy(source, doc_id, hour) rollup (engine_rollup_cascade's
-    # first stage: the ONE place raw rows cross the wire) — so executor
-    # scaling is evidenced for both plan classes, not just the
-    # embarrassingly parallel one. (Rolling up GAPFILLED points would
+    # the flagship (one range shuffle of the sequence rows; tier rows
+    # never shuffle); 'hourly_shuffle' decodes raw observations into
+    # the central groupBy(source, doc_id, hour) rollup
+    # (engine_rollup_cascade's first stage: the ONE place raw rows cross
+    # the wire) — so executor scaling is evidenced for a plan whose
+    # rolled rows shuffle too. (Rolling up GAPFILLED points would
     # shuffle the full 193M dense rows with no map-side reduction —
     # a 100x-overweight non-representative job; measured 7+ min/run
     # before this was corrected to the raw-observation shape.)
@@ -134,7 +194,7 @@ def run_once(cores: int) -> dict:
         )
     script = (
         "import os, sys, json, time\n"
-        f"os.sched_setaffinity(0, set(range({cores})))\n"
+        f"os.sched_setaffinity(0, {set(cpus)!r})\n"
         f"sys.path.insert(0, {os.path.dirname(os.path.dirname(os.path.abspath(__file__)))!r})\n"
         "from sentinel2_crop_trait_timeseries_spark.session import get_spark\n"
         + job_lines +
@@ -173,9 +233,13 @@ def run_once(cores: int) -> dict:
 
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 20000
-    low = int(sys.argv[2]) if len(sys.argv) > 2 else 8
-    high = int(sys.argv[3]) if len(sys.argv) > 3 else 32
+    high = int(sys.argv[3]) if len(sys.argv) > 3 else len(os.sched_getaffinity(0))
+    low = int(sys.argv[2]) if len(sys.argv) > 2 else high // 4
     n_pairs = int(sys.argv[4]) if len(sys.argv) > 4 else 12
+    try:
+        pins = {c: level_cpus(c) for c in (low, high)}
+    except ValueError as e:
+        raise SystemExit(f"bench_scaling_calibrated: {e}")
 
     gen = get_spark("s2tt_cal_gen", master=f"local[{high}]",
                     shuffle_partitions=high)
@@ -195,16 +259,16 @@ def main() -> None:
 
     pool = mp.Pool(PROBE_PROCS)
     probe_capacity(pool)  # warm the pool
-    run_once(low)         # warm-up pair (JIT, worker pools, page cache)
-    run_once(high)
+    run_once(pins[low])   # warm-up pair (JIT, worker pools, page cache)
+    run_once(pins[high])
 
     pairs = []
     for i in range(n_pairs):
         first, second = (low, high) if i % 2 == 0 else (high, low)
         c0 = probe_capacity(pool)
-        r_first = run_once(first)
+        r_first = run_once(pins[first])
         c1 = probe_capacity(pool)
-        r_second = run_once(second)
+        r_second = run_once(pins[second])
         c2 = probe_capacity(pool)
         r_low, r_high = (r_first, r_second) if first == low else (r_second, r_first)
         t_low, t_high = r_low["sec"], r_high["sec"]
@@ -227,66 +291,35 @@ def main() -> None:
               file=sys.stderr, flush=True)
     pool.close()
 
-    peak = max(max(p["probes_M_per_s"]) for p in pairs)
-    tol = 0.75
     ideal = high / low
-    # Clean-pair criteria, each targeting a distinct failure mode the
-    # bursty host exhibits:
-    #  (1) bracketing probes >= tol*peak — host had full capacity at
-    #      the pair's boundaries;
-    #  (2) ratio <= 1.02*ideal — a super-ideal ratio is physically
-    #      impossible and means a throttle landed MID-RUN on the
-    #      low-core half, between probes (2% timer-noise headroom);
-    #  (3) per-run /proc/stat steal DURING each half < 1 core — direct
-    #      evidence the hypervisor didn't take cores away mid-run
-    #      (catches throttles in either half that (1) cannot see).
-    superideal = ideal * 1.02
-    clean = [
-        p for p in pairs
-        if min(p["probes_M_per_s"]) >= tol * peak
-        and p["ratio"] <= superideal
-        and max(p["low_steal_cores"], p["high_steal_cores"]) < 1.0
-    ]
-    throttled = [p for p in pairs if p not in clean]
-
-    def med(ps):
-        return round(statistics.median(x["ratio"] for x in ps), 3) if ps else None
-
-    clean_med = med(clean)
     out = {
         "job": (
             "decode -> central groupBy(source,doc_id,hour) rollup "
             "(ONE shuffle of raw observations, noop sink)"
             if os.environ.get("SCALING_JOB") == "hourly_shuffle"
-            else "fused gapfill + per-doc 3-tier rollup (narrow, noop sink)"
+            else "fused gapfill + per-doc 3-tier rollup (one range shuffle "
+                 "of the sequence rows, noop sink)"
         ),
-        "methodology": "back-to-back alternating-order pairs; 32-way burn "
-                       "probes bracket each run; CLEAN pair = all probes >= "
-                       f"{tol:.0%} of session peak capacity AND ratio <= "
-                       "1.02*ideal (super-ideal ratios imply a mid-run "
-                       "throttle on the low-core half and are excluded); "
-                       "engine efficiency = median clean-pair ratio / ideal",
-        "n_superideal_excluded": sum(
-            1 for p in pairs
-            if min(p["probes_M_per_s"]) >= tol * peak
-            and p["ratio"] > superideal
-        ),
+        "methodology": "back-to-back alternating-order pairs, each level "
+                       "pinned to the first `cores` CPUs of the affinity "
+                       f"mask; {PROBE_PROCS}-way burn probes bracket each "
+                       "run; CLEAN pair = all probes >= "
+                       f"{PROBE_TOL:.0%} of session peak capacity AND ratio "
+                       f"<= {SUPERIDEAL}*ideal (super-ideal ratios imply a "
+                       "mid-run throttle on the low-core half and are "
+                       f"excluded) AND steal < {MAX_STEAL} core in each "
+                       "half; engine efficiency = median clean-pair ratio "
+                       "/ ideal",
         "n_docs": n_docs,
         "rolled_points": n_points,
         "low_cores": low,
         "high_cores": high,
-        "peak_capacity_M_per_s": round(peak, 1),
-        "pairs": pairs,
-        "n_clean": len(clean),
-        "n_throttled": len(throttled),
-        "median_ratio_clean": clean_med,
-        "median_ratio_throttled": med(throttled),
-        "median_ratio_all": med(pairs),
+        "low_cpus": pins[low],
+        "high_cpus": pins[high],
+        "peak_capacity_M_per_s": round(_peak(pairs), 1),
         "ideal_speedup": ideal,
-        "scaling_efficiency_clean": (
-            round(clean_med / ideal, 3) if clean_med else None
-        ),
-        "scaling_efficiency_all": round(med(pairs) / ideal, 3),
+        "pairs": pairs,
+        **score([{"pairs": pairs, "ideal_speedup": ideal}]),
     }
     print(json.dumps(out, indent=2))
 

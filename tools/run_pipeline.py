@@ -4,10 +4,12 @@
     spark-submit --py-files s2tt_spark.zip tools/run_pipeline.py \
         --input /path/sequences --output /path/tiers \
         --manifest /path/manifest [--docs N] [--curve asymptotic] \
-        [--knockout 0.1] [--sources-per-run 0]
+        [--knockout 0.1]
 
 Stages (all per-source partitions, committed to the checkpoint manifest
-so a killed run resumes where it stopped):
+so a killed run resumes where it stopped; every sink overwrites only the
+partitions of the sources it writes, so a resumed run keeps the sources
+committed before it):
 
   1. resume set      = distinct sources LEFT ANTI done manifest keys
   2. fused rollup    = gapfill_tiers over the todo sources (one range
@@ -40,6 +42,20 @@ from sentinel2_crop_trait_timeseries_spark.operators.fit import fit_sigmoid
 from sentinel2_crop_trait_timeseries_spark.operators.decode import decode_observations_arrow
 from sentinel2_crop_trait_timeseries_spark.operators.compress import compress_segments
 from sentinel2_crop_trait_timeseries_spark.operators.manifest import CheckpointManifest
+
+
+def _write(df, path: str, *partition_cols: str) -> None:
+    """Overwrite only the partitions `df` holds: a static overwrite would
+    delete the files of sources committed by an earlier run."""
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        *partition_cols
+    ).parquet(path)
+
+
+def _stored(spark, path: str, todo):
+    """This run's sources as stored: the metrics committed for them must
+    not count the sources earlier runs committed."""
+    return spark.read.parquet(path).join(F.broadcast(todo), "source", "left_semi")
 
 
 def main() -> None:
@@ -83,25 +99,23 @@ def main() -> None:
     # fused pass: gap-fill + 3 retention tiers; only the sequence rows
     # shuffle (range split on source, doc_id), the tier rows never do
     tiers = gapfill_tiers(work, curve=args.curve, knockout=args.knockout)
-    tiers.write.mode("overwrite").partitionBy("tier", "source").parquet(args.output)
-    tiers_stored = spark.read.parquet(args.output)
+    _write(tiers, args.output, "tier", "source")
     rows_per_src = (
-        tiers_stored.groupBy("source").agg(F.sum("n").alias("rows_rolled"))
+        _stored(spark, args.output, todo)
+        .groupBy("source").agg(F.sum("n").alias("rows_rolled"))
     )
 
     # per-doc NLS fit metrics (batched LM; failures ledgered not raised)
-    fits = fit_sigmoid(work)
-    fits.write.mode("overwrite").parquet(args.fits)
-    fits_stored = spark.read.parquet(args.fits)
-    rmse_per_src = fits_stored.filter("status = 'done'").groupBy("source").agg(
-        F.avg("fit_rmse").alias("fit_rmse")
+    _write(fit_sigmoid(work), args.fits, "source")
+    rmse_per_src = (
+        _stored(spark, args.fits, todo).filter("status = 'done'")
+        .groupBy("source").agg(F.avg("fit_rmse").alias("fit_rmse"))
     )
 
     # Gorilla-compressed observation segments
-    seg = compress_segments(decode_observations_arrow(work))
-    seg.write.mode("overwrite").parquet(args.segments)
+    _write(compress_segments(decode_observations_arrow(work)), args.segments, "source")
     comp_per_src = (
-        spark.read.parquet(args.segments)
+        _stored(spark, args.segments, todo)
         .groupBy("source")
         .agg((F.sum("raw_bytes") / F.sum("enc_bytes")).alias("compression_ratio"))
     )
